@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Benchmark main (driver contract): run every SparkEntry query on
@@ -57,28 +56,11 @@ object Bench {
     // local[4] vs 72.8 s on local[32] — per-stage task scheduling dominates
     // at this data size, so more threads only add overhead. Override with
     // SPARK_GRAFT_CPUS at larger SFs where scans/shuffles are CPU-bound.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Round-11 (guide §2.2/§2.5): AQE's parallelism-first coalescing
-      // bottoms out at minPartitionSize (default 1m), which SERIALIZES
-      // byte-small but CPU-dense stages — x12's candidate verify
-      // (array_intersect over 322k pairs, ~5 MB shuffled) ran as 3 tasks
-      // and measured 6.5 s vs 2.3 s at 64k in a within-JVM A/B. 64k only
-      // changes shuffles far below the advisory size, so cluster-scale
-      // plans (partitions ≫ 1 MB) are untouched — this is a
-      // small-shuffle parallelism floor, not a local[32] constant.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"))
-      // FAIR so the q_sql_concurrent panel volley shares cores across its
-      // 12 per-panel pools instead of queueing them FIFO
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // FAIR so the q_sql_concurrent panel volley shares cores across its
+    // 12 per-panel pools instead of queueing them FIFO
+    val spark = Graft.session(cores = cpus,
+      extraConf = Map("spark.scheduler.mode" -> "FAIR"))
     spark.sparkContext.setLogLevel("WARN")
     // warm-up outside the timed region: JVM/codegen/parquet-reader init
     // otherwise lands entirely on the alphabetically-first query

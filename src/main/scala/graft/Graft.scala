@@ -19,9 +19,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  /** A session configured the way every graft main configures it: AQE on,
-    * UTC, shuffle parallelism = cores (not the 200 default — at cluster
-    * scale set this to 2–3× total executor cores instead). */
+  /** The one session factory: every graft main and the test suite build
+    * their session here (only `Smoke` stays bare, as the driver's
+    * unconfigured-session check). AQE on, UTC, shuffle parallelism = cores
+    * (not the 200 default — at cluster scale set this to 2–3× total
+    * executor cores instead); harness-only confs go through `extraConf`. */
   def session(appName: String = "graft", cores: Int =
       Runtime.getRuntime.availableProcessors.min(32),
       extraConf: Map[String, String] = Map.empty): SparkSession = {
@@ -39,7 +41,6 @@ object Graft {
       // (measured 3× on q_x12's candidate-verify shuffle). 64k only
       // affects shuffles far below the advisory partition size, so
       // cluster-scale plans with ≫1 MB partitions are untouched.
-      // Same env override as the harness mains.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"))
       .config("spark.ui.enabled", "false")

@@ -36,14 +36,8 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
     val nKeys = args.drop(1).headOption.map(_.toLong).getOrElse(50000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(
+      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -155,7 +149,7 @@ object Stress {
         val vecs = spark.range(nVecs).select(col("id").as("vec_id"),
           expr("""transform(sequence(0, 63),
                  |  d -> CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0)"""
-            .stripMargin).as("embedding"))
+            .stripMargin).as("v"))
         graft.operators.Similarity.signatureStage(vecs)
           .write.mode("overwrite").format("noop").save()
       },

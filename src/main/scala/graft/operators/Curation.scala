@@ -726,28 +726,19 @@ object Curation {
     * rows-only twin needed. */
   def fuzzyDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val base = docs(spark, dir).select(col("doc_id"), col("text"))
-    val bench = base.filter(col("doc_id") % 53 === 0)
-      .select((col("doc_id") + 3000000).as("doc_id"),
-        expr("concat_ws(' ', slice(split(text, '\\\\s+'), 2, 100000))").as("text"))
-    val sigs = Dedup.minhashPolyStage(base.union(bench)).cache()
-    val banded = Dedup.capBuckets(
-      sigs.select(col("doc_id"),
-        posexplode(col("buckets")).as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), maxBucketSize = 100000)
-    val bt = banded.filter(col("doc_id") < 3000000)
-      .select(col("doc_id").as("train_id"), col("band"), col("bucket"))
-    val bb = banded.filter(col("doc_id") >= 3000000)
-      .select(col("doc_id").as("bench_id"), col("band"), col("bucket"))
-    val cand = bt.join(broadcast(bb), Seq("band", "bucket"))
-      .select(col("train_id"), col("bench_id")).distinct()
+    val sigs = Dedup.minhashPolyStage(
+      base.union(CandidatePairs.perturbed(base, 3000000, 53))).cache()
+    val banded = Dedup.minhashBanded(sigs)
+    val cand = CandidatePairs.probePairs(banded.filter(col("doc_id") < 3000000),
+      broadcast(banded.filter(col("doc_id") >= 3000000)), Dedup.bandKeys,
+      "train_id", "bench_id")
     val shT = sigs.select(col("doc_id").as("train_id"),
       col("shingles").as("sh_t"))
     val shB = sigs.select(col("doc_id").as("bench_id"),
       col("shingles").as("sh_b"))
     cand.join(shT, Seq("train_id")).join(broadcast(shB), Seq("bench_id"))
       .withColumn("jaccard",
-        size(array_intersect(col("sh_t"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_t"), col("sh_b"))))
+        CandidatePairs.jaccard(col("sh_t"), col("sh_b")))
       .filter(G.simFilter(col("jaccard"), lit(0.5)))
       .select(col("train_id"), col("bench_id"),
         round(col("jaccard"), 4).as("jaccard"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.G
+import graft.operators.CandidatePairs._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,30 +62,6 @@ object Dedup {
       |SELECT md5(text) AS h, min(doc_id) AS kept, count(*) AS n_copies
       |FROM all_docs GROUP BY 1 ORDER BY kept""".stripMargin
 
-  /** Skew guard for LSH band buckets: drop buckets holding more than
-    * `maxBucketSize` rows before the bucket-equality self-join. A hot bucket
-    * (popular boilerplate text, a degenerate hyperplane cell) contributes
-    * O(size²) candidate pairs — one 10M-row bucket at 100 TB is 10¹⁴ pairs
-    * in a single straggler task, which no AQE skew-split saves because the
-    * blowup is in the JOIN OUTPUT, not the input partition. Dropping the
-    * bucket is the standard LSH mitigation (near-dups that collide there
-    * still collide in the other bands/tables with high probability).
-    * Results are unchanged for uniform data: no bucket reaches the cap and
-    * the filter keeps every row.
-    *
-    * Implemented as a window count, not groupBy-count + join-back: one
-    * shuffle on the bucket key, the banded frame is computed once, and the
-    * output stays hash-partitioned by `keys` — which is exactly the
-    * distribution the LSH self-join needs next, so Catalyst plans no
-    * further exchange for it. */
-  private[graft] def capBuckets(banded: DataFrame, keys: Seq[String],
-      maxBucketSize: Long): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    banded.withColumn("__bucket_n", count(lit(1)).over(w))
-      .filter(col("__bucket_n") <= maxBucketSize)
-      .drop("__bucket_n")
-  }
-
   // ------------------------------------------------------------- signatures
 
   private val P = 1000000007L // prime field for the minhash permutations
@@ -120,16 +97,27 @@ object Dedup {
     x
   }
 
-  /** Per-doc MinHash signature over distinct word-3-shingles.
-    * sig_i = min over shingles of ((fnv64 mod P) * (2i+1) + i·knuth) mod P. */
-  private def minhashSig(shingles: Iterator[String]): Array[Long] = {
+  /** Distinct lowercase word-3-shingles of `text`; None under 3 tokens
+    * (the signature stages' contract: such docs drop). */
+  private def shingles3(text: String): Option[Array[String]] = {
+    val toks = text.toLowerCase.split("\\s+")
+    if (toks.length < 3) None
+    else Some(Array.tabulate(toks.length - 2)(i =>
+      s"${toks(i)} ${toks(i + 1)} ${toks(i + 2)}").distinct)
+  }
+
+  /** Per-doc 64-permutation MinHash signature over shingles:
+    * sig_i = min over shingles of (h(s) * (2i+1) + i·knuth) mod P, with
+    * `h` the shingle hash reduced into [0, P). */
+  private def minhashSig(shingles: Array[String], h: String => Long)
+      : Array[Long] = {
     val sig = Array.fill(64)(Long.MaxValue)
     shingles.foreach { s =>
-      val base = java.lang.Math.floorMod(fnv64(s), P)
+      val base = h(s)
       var i = 0
       while (i < 64) {
-        val h = (base * (2L * i + 1) + i * 2654435761L) % P
-        if (h < sig(i)) sig(i) = h
+        val p = (base * (2L * i + 1) + i * 2654435761L) % P
+        if (p < sig(i)) sig(i) = p
         i += 1
       }
     }
@@ -142,22 +130,11 @@ object Dedup {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val toks = text.toLowerCase.split("\\s+")
-          if (toks.length < 3) None
-          else {
-            val sh = Array.tabulate(toks.length - 2)(i =>
-              s"${toks(i)} ${toks(i + 1)} ${toks(i + 2)}").distinct
-            Some((id, sh, minhashSig(sh.iterator)))
-          }
-        }
-      }.toDF("doc_id", "shingles", "minhash")
+      .mapPartitions(_.flatMap { case (id, text) =>
+        shingles3(text).map(sh => (id, sh,
+          minhashSig(sh, s => java.lang.Math.floorMod(fnv64(s), P))))
+      }).toDF("doc_id", "shingles", "minhash")
   }
-
-  /** Docs with shingles + minhash signature (internal). */
-  def signatures(spark: SparkSession, dir: String): DataFrame =
-    signaturesOn(G.table(spark, dir, "documents"))
 
   /** MinHash + LSH near-dup pairs. Input is documents ∪ perturbed copies
     * (every 7th doc, first token dropped, re-keyed +2000000) so true
@@ -166,39 +143,42 @@ object Dedup {
     * No SQL oracle (banding isn't SQL-expressible) — rows-only check;
     * DedupSpec asserts every planted pair is recovered. */
   def minhashLshPairs(spark: SparkSession, dir: String): DataFrame = {
-    val base = G.table(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val perturbed = base.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 2000000).as("doc_id"),
-        expr("concat_ws(' ', slice(split(text, '\\\\s+'), 2, 100000))").as("text"))
-    val docs = signaturesOn(base.union(perturbed)).cache()
+    val docs = signaturesOn(plantedDocs(spark, dir)).cache()
     // band → bucket ids only; shingle arrays are NOT carried through the
     // bucket join + distinct (they'd be shuffled 16× otherwise) — candidate
     // pairs are deduped first, then signatures joined back for verification
-    val banded = capBuckets(
+    verifiedJaccardPairs(capBuckets(
       docs.select(col("doc_id"),
         posexplode(expr(
           "transform(sequence(0, 15), b -> xxhash64(concat_ws(',', slice(minhash, b*4+1, 4))))"))
-          .as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), maxBucketSize = 100000)
-    val a = banded.select(col("doc_id").as("doc_a"), col("band"), col("bucket"))
-    val b = banded.select(col("doc_id").as("doc_b"), col("band"), col("bucket"))
-    val pairs = a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-    val shingleSets = docs.select(col("doc_id"), col("shingles"))
-    pairs
-      .join(shingleSets.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("shingles", "sh_a"), Seq("doc_a"))
-      .join(shingleSets.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("shingles", "sh_b"), Seq("doc_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(G.simFilter(col("jaccard"), lit(0.5)))
+          .as(bandKeys)),
+      bandKeys, maxBucketSize = 100000), docs)
+  }
+
+  /** The MinHash families' planted population: documents ∪ every 7th doc
+    * first-token-dropped, re-keyed +2000000 (x2, x2b, x10). */
+  private def plantedDocs(spark: SparkSession, dir: String): DataFrame = {
+    val base = G.table(spark, dir, "documents").select(col("doc_id"), col("text"))
+    base.union(perturbed(base, 2000000, 7))
+  }
+
+  private[operators] val bandKeys = Seq("band", "bucket")
+
+  /** Capped (doc_id, band, bucket) rows of a [[minhashPolyStage]] frame. */
+  private[operators] def minhashBanded(docs: DataFrame): DataFrame =
+    capBuckets(docs.select(col("doc_id"),
+      posexplode(col("buckets")).as(bandKeys)), bandKeys,
+      maxBucketSize = 100000)
+
+  /** The x2/x2b tail: bucket pairs of `banded`, verified at shingle
+    * Jaccard ≥ 0.5 against `docs`' shingle sets. */
+  private def verifiedJaccardPairs(banded: DataFrame, docs: DataFrame)
+      : DataFrame =
+    verifyPairs(bucketPairs(banded, bandKeys),
+      docs.select(col("doc_id"), col("shingles").as("sh_")),
+      "jaccard" -> jaccard(col("sh_a"), col("sh_b")), 0.5)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** 64-bit SimHash per document: sum ±1 per bit over token hashes, sign →
     * bit. Pure projection; rows-only (engine hash functions differ).
@@ -212,24 +192,29 @@ object Dedup {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val counts = new Array[Int](64)
-          text.toLowerCase.split("\\s+").foreach { t =>
-            val h = fnv64(t)
-            var b = 0
-            while (b < 64) {
-              if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-              b += 1
-            }
-          }
-          var sig = 0L
-          var b = 0
-          while (b < 64) { if (counts(b) > 0) sig |= 1L << b; b += 1 }
-          (id, sig)
-        }
-      }.toDF("doc_id", "simhash")
+      .mapPartitions(_.map { case (id, text) =>
+        (id, simhashOf(text.toLowerCase.split("\\s+"), 64, fnv64))
+      }).toDF("doc_id", "simhash")
       .orderBy(col("doc_id"))
+  }
+
+  /** Sign-of-bit-counts SimHash over the low `bits` bits of each token's
+    * hash `h`: bit b is set iff more tokens have it set than clear. */
+  private def simhashOf(tokens: Array[String], bits: Int, h: String => Long)
+      : Long = {
+    val counts = new Array[Int](bits)
+    tokens.foreach { t =>
+      val x = h(t)
+      var b = 0
+      while (b < bits) {
+        if (((x >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
+        b += 1
+      }
+    }
+    var sig = 0L
+    var b = 0
+    while (b < bits) { if (counts(b) > 0) sig |= 1L << b; b += 1 }
+    sig
   }
 
   /** Oracle-checkable 30-bit SimHash twin of [[simhashOn]]: the token hash
@@ -244,29 +229,10 @@ object Dedup {
     import spark2.implicits._
     G.table(spark, dir, "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val toks = text.toLowerCase.split("\\s+")
-          val counts = new Array[Int](30)
-          toks.foreach { t =>
-            var h = 0L
-            var i = 0
-            while (i < t.length) {
-              h = (h * 31 + t.codePointAt(i)) % 1000000007L
-              i += Character.charCount(t.codePointAt(i))
-            }
-            var b = 0
-            while (b < 30) {
-              if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-              b += 1
-            }
-          }
-          var sig = 0L
-          var b = 0
-          while (b < 30) { if (counts(b) > 0) sig |= 1L << b; b += 1 }
-          (id, sig, toks.length.toLong)
-        }
-      }.toDF("doc_id", "simhash30", "n_tokens")
+      .mapPartitions(_.map { case (id, text) =>
+        val toks = text.toLowerCase.split("\\s+")
+        (id, simhashOf(toks, 30, polyHashMod), toks.length.toLong)
+      }).toDF("doc_id", "simhash30", "n_tokens")
       .orderBy(col("doc_id"))
   }
 
@@ -301,18 +267,6 @@ object Dedup {
     h
   }
 
-  /** Fully oracle-checked MinHash+LSH near-dup pipeline — the checkable
-    * twin of [[minhashLshPairs]]. Every stage is deterministic mod-P
-    * arithmetic, so the WHOLE pipeline (shingle hash → 64-permutation
-    * signature → 16×4 banding → bucket-join candidates → exact-Jaccard
-    * verify) replays in DuckDB SQL and hash-compares bit-exactly:
-    *  - shingle hash: [[polyHashMod]] (not FNV — wraparound mult overflows
-    *    checked BIGINT),
-    *  - permutation i: (h·(2i+1) + i·2654435761) mod P (max ~1.3e11, safe),
-    *  - band bucket b: rolling (a·31 + sig_i) mod P over the band's 4 sigs.
-    * Same planted near-dups and same scale shape as the production variant
-    * (signatures in a tight JVM loop, bucket-equality joins only, skew cap);
-    * the production variant keeps FNV-64's better mixing. */
   /** The SQL-replayable MinHash ingest: (doc_id, text) → (doc_id, shingles,
     * buckets) — 3-token shingles, [[polyHashMod]] 64-permutation signatures,
     * 16×4 mod-P band buckets, all in one tight JVM pass. Shared by the
@@ -330,42 +284,34 @@ object Dedup {
     val spark2 = df.sparkSession
     import spark2.implicits._
     df.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val toks = text.toLowerCase.split("\\s+")
-          if (toks.length < 3) None
-          else {
-            val sh = Array.tabulate(toks.length - 2)(i =>
-              s"${toks(i)} ${toks(i + 1)} ${toks(i + 2)}").distinct
-            val sig = Array.fill(64)(Long.MaxValue)
-            sh.foreach { s =>
-              val h = polyHashMod(s)
-              var i = 0
-              while (i < 64) {
-                val p = (h * (2L * i + 1) + i * 2654435761L) % P
-                if (p < sig(i)) sig(i) = p
-                i += 1
-              }
-            }
-            val buckets = Array.tabulate(16) { b =>
-              var a = 0L
-              var j = 0
-              while (j < 4) { a = (a * 31 + sig(b * 4 + j)) % P; j += 1 }
-              a
-            }
-            Some((id, sh, sig, buckets))
+      .mapPartitions(_.flatMap { case (id, text) =>
+        shingles3(text).map { sh =>
+          val sig = minhashSig(sh, polyHashMod)
+          val buckets = Array.tabulate(16) { b =>
+            var a = 0L
+            var j = 0
+            while (j < 4) { a = (a * 31 + sig(b * 4 + j)) % P; j += 1 }
+            a
           }
+          (id, sh, sig, buckets)
         }
-      }.toDF("doc_id", "shingles", "sig", "buckets")
+      }).toDF("doc_id", "shingles", "sig", "buckets")
   }
 
-  def minhashLshPairsChecked(spark: SparkSession, dir: String): DataFrame = {
-    val base = G.table(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val perturbed = base.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 2000000).as("doc_id"),
-        expr("concat_ws(' ', slice(split(text, '\\\\s+'), 2, 100000))").as("text"))
-    minhashLshPairsCheckedOn(base.union(perturbed))
-  }
+  /** Fully oracle-checked MinHash+LSH near-dup pipeline — the checkable
+    * twin of [[minhashLshPairs]]. Every stage is deterministic mod-P
+    * arithmetic, so the WHOLE pipeline (shingle hash → 64-permutation
+    * signature → 16×4 banding → bucket-join candidates → exact-Jaccard
+    * verify) replays in DuckDB SQL and hash-compares bit-exactly:
+    *  - shingle hash: [[polyHashMod]] (not FNV — wraparound mult overflows
+    *    checked BIGINT),
+    *  - permutation i: (h·(2i+1) + i·2654435761) mod P (max ~1.3e11, safe),
+    *  - band bucket b: rolling (a·31 + sig_i) mod P over the band's 4 sigs.
+    * Same planted near-dups and same scale shape as the production variant
+    * (signatures in a tight JVM loop, bucket-equality joins only, skew cap);
+    * the production variant keeps FNV-64's better mixing. */
+  def minhashLshPairsChecked(spark: SparkSession, dir: String): DataFrame =
+    minhashLshPairsCheckedOn(plantedDocs(spark, dir))
 
   /** The full checked MinHash-LSH pipeline (signatures → banding →
     * capped bucket join → exact-Jaccard verify) on any (doc_id, text)
@@ -373,28 +319,7 @@ object Dedup {
   private[graft] def minhashLshPairsCheckedOn(docsDf: DataFrame)
       : DataFrame = {
     val docs = minhashPolyStage(docsDf).cache()
-    val banded = capBuckets(
-      docs.select(col("doc_id"),
-        posexplode(col("buckets")).as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), maxBucketSize = 100000)
-    val a = banded.select(col("doc_id").as("doc_a"), col("band"), col("bucket"))
-    val b = banded.select(col("doc_id").as("doc_b"), col("band"), col("bucket"))
-    val pairs = a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-    val shingleSets = docs.select(col("doc_id"), col("shingles"))
-    pairs
-      .join(shingleSets.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("shingles", "sh_a"), Seq("doc_a"))
-      .join(shingleSets.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("shingles", "sh_b"), Seq("doc_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(G.simFilter(col("jaccard"), lit(0.5)))
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    verifiedJaccardPairs(minhashBanded(docs), docs)
   }
 
   /** q_x10: MinHash ESTIMATOR ACCURACY — the sketch-calibration eval every
@@ -414,31 +339,14 @@ object Dedup {
     * (count / 2^6), so the decimal-summed means replay bit-identically in
     * the DuckDB oracle. */
   def minhashAccuracy(spark: SparkSession, dir: String): DataFrame = {
-    val base = G.table(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val perturbed = base.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 2000000).as("doc_id"),
-        expr("concat_ws(' ', slice(split(text, '\\\\s+'), 2, 100000))").as("text"))
-    val docs = minhashSigStage(base.union(perturbed)).cache()
-    val banded = capBuckets(
-      docs.select(col("doc_id"),
-        posexplode(col("buckets")).as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), maxBucketSize = 100000)
-    val a = banded.select(col("doc_id").as("doc_a"), col("band"), col("bucket"))
-    val b = banded.select(col("doc_id").as("doc_b"), col("band"), col("bucket"))
-    val pairs = a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-    val sides = docs.select(col("doc_id"), col("shingles"), col("sig"))
-    pairs
-      .join(sides.toDF("doc_a", "sh_a", "sig_a"), Seq("doc_a"))
-      .join(sides.toDF("doc_b", "sh_b", "sig_b"), Seq("doc_b"))
+    val docs = minhashSigStage(plantedDocs(spark, dir)).cache()
+    withSides(bucketPairs(minhashBanded(docs), bandKeys),
+      docs.select(col("doc_id"), col("shingles").as("sh_"), col("sig").as("sig_")))
       .select(
         expr("""aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),
                 |         0, (s, t) -> s + t) / CAST(64 AS DOUBLE)""".stripMargin)
           .as("est"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b")))).as("exact"))
+        jaccard(col("sh_a"), col("sh_b")).as("exact"))
       .groupBy(least(floor(col("exact") * 10), lit(9.0)).cast("long").as("bin"))
       .agg(count(lit(1)).as("n_pairs"),
         round(G.davg(col("est")), 4).as("avg_est"),
@@ -575,10 +483,8 @@ object Dedup {
     // counted 45k base docs as delta members (caught by the sf1
     // correctness pass). One metadata-cheap max() scan; the DuckDB oracle
     // derives the identical offset as a scalar subquery.
-    val off = base.agg(max(col("doc_id"))).head.getLong(0) + 1
-    val dropFirst = base.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + off).as("doc_id"),
-        expr("concat_ws(' ', slice(split(text, '\\\\s+'), 2, 100000))").as("text"))
+    val off = base.agg(max(col("doc_id"))).head().getLong(0) + 1
+    val dropFirst = perturbed(base, off, 7)
     val dropLast = base.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 3L * off).as("doc_id"),
         expr("""concat_ws(' ', slice(split(text, '\\s+'), 1,
@@ -592,44 +498,30 @@ object Dedup {
     val tmp = java.nio.file.Files.createTempDirectory("graft_x15_idx").toString
     minhashPolyStage(base)
       .select(col("doc_id"),
-        posexplode(col("buckets")).as(Seq("band", "bucket")))
+        posexplode(col("buckets")).as(bandKeys))
       .write.mode("overwrite").parquet(s"$tmp/index")
     val index = spark.read.parquet(s"$tmp/index")
 
     // today's job: sign the DELTA only, probe the stored index
     val deltaStage = minhashPolyStage(delta).cache()
-    val deltaBanded = capBuckets(
-      deltaStage.select(col("doc_id"),
-        posexplode(col("buckets")).as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), maxBucketSize = 100000).cache()
-    val candIdx = deltaBanded
-      .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
-      .join(index.select(col("doc_id").as("base_id"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .select(col("new_id"), col("base_id")).distinct()
-    val candBatch = deltaBanded
-      .select(col("doc_id").as("da"), col("band"), col("bucket"))
-      .join(deltaBanded.select(col("doc_id").as("db"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(col("da") < col("db"))
-      .select(col("da"), col("db")).distinct()
+    val deltaBanded = minhashBanded(deltaStage).cache()
+    val candIdx = probePairs(deltaBanded, index, bandKeys, "new_id", "base_id")
+    val candBatch = bucketPairs(deltaBanded, bandKeys, a = "da", b = "db")
 
     // verify: base shingles recomputed ONLY for candidate docs (semi-join
     // pushes the candidate id set into the documents scan)
     val baseCand = shinglesOn(base.join(
       candIdx.select(col("base_id").as("doc_id")).distinct(),
       Seq("doc_id"), "left_semi"))
-    def jac(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
     val verIdx = candIdx
       .join(deltaStage.select(col("doc_id").as("new_id"), col("shingles").as("sh_n")), "new_id")
       .join(baseCand.select(col("doc_id").as("base_id"), col("shingles").as("sh_b")), "base_id")
-      .withColumn("j", jac(col("sh_n"), col("sh_b")))
+      .withColumn("j", jaccard(col("sh_n"), col("sh_b")))
       .filter(G.simFilter(col("j"), lit(0.5)))
     val verBatch = candBatch
       .join(deltaStage.select(col("doc_id").as("da"), col("shingles").as("sh_a")), "da")
       .join(deltaStage.select(col("doc_id").as("db"), col("shingles").as("sh_b2")), "db")
-      .withColumn("j", jac(col("sh_a"), col("sh_b2")))
+      .withColumn("j", jaccard(col("sh_a"), col("sh_b2")))
       .filter(G.simFilter(col("j"), lit(0.5)))
 
     val idxAgg = verIdx.groupBy(col("new_id").as("doc_id"))
@@ -763,19 +655,8 @@ object Dedup {
             |      shiftright(rest, 14) & 63)""".stripMargin))
           .as(Seq("sb", "sbv")))
     val keys = Seq("band", "bucket", "sb", "sbv")
-    val banded = capBuckets(cold.unionByName(hot), keys, maxBucketSize = cap)
-    val a = banded.select((col("doc_id").as("doc_a") +:
-      col("simhash30").as("sig_a") +: keys.map(col)): _*)
-    val b = banded.select((col("doc_id").as("doc_b") +:
-      col("simhash30").as("sig_b") +: keys.map(col)): _*)
-    a.join(b, keys)
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("CAST(bit_count(sig_a ^ sig_b) AS BIGINT)").as("hamming"))
-      // hamming filter BEFORE distinct: prunes the false-positive bucket
-      // collisions map-side, so the dedup exchange carries survivors only
-      .filter(col("hamming") <= 2)
-      .distinct()
+    hammingPairs(capBuckets(cold.unionByName(hot), keys, maxBucketSize = cap),
+      keys, "simhash30", maxDist = 2)
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -791,31 +672,22 @@ object Dedup {
   /** Character-3-gram Jaccard near-dup over a bounded window (doc_id < 100
     * both sides — the exact-verification kernel that LSH candidates feed at
     * scale). SQL-expressible end to end → full oracle. */
-  def jaccard3gramPairs(spark: SparkSession, dir: String): DataFrame = {
-    val grams = G.table(spark, dir, "documents")
-      .filter(col("doc_id") < 100)
-      .select(col("doc_id"),
-        expr("""array_distinct(transform(sequence(1, length(text)-2),
-               |  i -> substring(text, i, 3)))""".stripMargin).as("grams"))
-    // repartition the STREAMED side of the bounded cross join (round-11,
-    // guide §2.6 idle capacity): the 100-doc window is one parquet split,
-    // so the O(pairs) gram-set intersections otherwise run on ONE task
-    // while 31 cores idle. Width follows the session's shuffle setting —
-    // a conf, not a local constant (and AQE never coalesces a numbered
-    // repartition). Row set unchanged.
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val a = grams.select(col("doc_id").as("doc_a"), col("grams").as("g_a"))
-      .repartition(parts)
-    val b = grams.select(col("doc_id").as("doc_b"), col("grams").as("g_b"))
-    a.crossJoin(b)
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("g_a"), col("g_b"))).cast("double") /
-          size(array_union(col("g_a"), col("g_b"))))
+  def jaccard3gramPairs(spark: SparkSession, dir: String): DataFrame =
+    allPairs(charGramWindow(spark, dir, 100).toDF("doc_id", "g_"))
+      .withColumn("jaccard", jaccard(col("g_a"), col("g_b")))
       .filter(G.simFilter(col("jaccard"), lit(0.5)))
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
+
+  /** (doc_id, distinct char-3-gram set) of the documents with doc_id < n —
+    * the bounded all-pairs window of x4 and c29. */
+  private def charGramWindow(spark: SparkSession, dir: String, n: Int)
+      : DataFrame =
+    G.table(spark, dir, "documents")
+      .filter(col("doc_id") < n)
+      .select(col("doc_id"),
+        expr("""array_distinct(transform(sequence(1, length(text)-2),
+               |  i -> substring(text, i, 3)))""".stripMargin).as("grams"))
 
   /** q_x9: edit-distance verification kernel — exact Levenshtein over
     * 200-char prefixes for the bounded candidate window (doc_id < 100,
@@ -830,14 +702,8 @@ object Dedup {
     val pre = G.table(spark, dir, "documents")
       .filter(col("doc_id") < 100)
       .select(col("doc_id"), substring(col("text"), 1, 200).as("p"))
-    // repartition the streamed side — same single-split serialization as
-    // x4 (round-11): ~5k Levenshtein DPs over 200-char prefixes are ~200M
-    // cell updates, all on one task without this.
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val a = pre.select(col("doc_id").as("doc_a"), col("p").as("pa"))
-      .repartition(parts)
-    val b = pre.select(col("doc_id").as("doc_b"), col("p").as("pb"))
-    a.crossJoin(b).filter(col("doc_a") < col("doc_b"))
+    // ~5k Levenshtein DPs over 200-char prefixes are ~200M cell updates
+    allPairs(pre)
       .withColumn("dist", levenshtein(col("pa"), col("pb")).cast("long"))
       .filter(col("dist") <= 80)
       .withColumn("sim", lit(1.0) - col("dist").cast("double") / 200.0)
@@ -970,7 +836,7 @@ object Dedup {
     val pairs = pairsDf.rdd.cache()
     val nPairs = pairs.count()
     val parts = math.max(1, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      G.shuffleWidth(spark),
       (nPairs / 250000L).toInt))
     val part = new org.apache.spark.HashPartitioner(parts)
     // (dst, src): neighbor lists keyed by the propagation target
@@ -1326,8 +1192,7 @@ object Dedup {
     val n = deg.count()
     var ranks = deg
       .select(col("node"), col("deg"), (lit(1.0) / n).as("rank"))
-    val ckpt = spark.conf.getOption("graft.c15.ckpt").exists(_.toBoolean)
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val contrib = edges
         .join(ranks, col("src") === col("node"))
         .groupBy(col("dst"))
@@ -1335,16 +1200,10 @@ object Dedup {
       ranks = deg.join(contrib, col("node") === col("dst"))
         .select(col("node"), col("deg"),
           (lit(0.15) / n + lit(0.85) * col("contrib")).as("rank"))
-      // Round-12 MEASURED AND REJECTED (default off): a per-round
-      // localCheckpoint truncates the lazily-chained round plans (plan
-      // 496 -> 228 lines, exec 2.5 -> 1.0 s) but the checkpoint
-      // materialization costs ~2 s per execution — 12-rep within-JVM A/B
-      // totals: ckpt ~3.26 s vs plain ~3.09 s steady-state, and the full
-      // bench read c15 3.6 -> 4.3 s with it on. The chained plan's task
-      // binaries (2 MiB+) are cheaper than eager materialization at this
-      // round count. Conf gate kept for re-measurement at larger scale,
-      // where plan depth grows with data and the trade may invert.
-      if (ckpt && i < iters) ranks = ranks.localCheckpoint()
+      // No per-round localCheckpoint: measured and rejected in round 12
+      // (12-rep within-JVM A/B, ckpt ~3.26 s vs plain ~3.09 s; full bench
+      // c15 3.6 -> 4.3 s) — at this round count the chained plan's task
+      // binaries are cheaper than eager materialization.
     }
     ranks.select(col("node").as("doc_id"), col("deg"), col("rank"))
       .orderBy(col("doc_id"))
@@ -1699,23 +1558,13 @@ object Dedup {
     * reference byte-range semantics of exact-substring dedup. */
   def dedupCut(spark: SparkSession, dir: String): DataFrame = {
     val K = 16
-    // Round-12 (guide §2.6 idle capacity, the r11 numbered-repartition
-    // move): the documents scan is ONE split at bench SFs (a single
-    // sub-MB parquet file), so the per-position 16-gram concat+md5 — the
-    // query's dominant CPU — ran as two ~850 ms single-task stages with
-    // 31 cores idle. The numbered repartition (width = session conf, AQE
-    // never coalesces it) spreads the tokenized frame; it fires ONLY when
-    // the scan's own parallelism is under half the session width, so a
-    // production corpus whose scan already has many splits skips the
-    // shuffle entirely. Both the position explode and the digest explode
+    // Round-12 (G.spreadScan): the per-position 16-gram concat+md5 — the
+    // query's dominant CPU — ran as two ~850 ms single-task stages on the
+    // one-split scan. Both the position explode and the digest explode
     // consume the SAME exchange (ReuseExchange), so tokenization also
     // drops from two passes to one.
-    val docsRaw = G.table(spark, dir, "documents")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("ts"))
-    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val toksDf =
-      if (docsRaw.rdd.getNumPartitions * 2 < width) docsRaw.repartition(width)
-      else docsRaw
+    val toksDf = G.spreadScan(G.table(spark, dir, "documents")
+      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("ts")))
     val pos = toksDf.select(col("doc_id"),
       posexplode(col("ts")).as(Seq("off", "tok")))
     val starts = toksDf.select(col("doc_id"),
@@ -1895,15 +1744,8 @@ object Dedup {
     // explicit localCheckpoint of `capped` ADDED 0.9 s (materialization
     // barrier + serialization) over letting the planner reuse the shuffle.
     val capped = capBuckets(pre, Seq("g"), maxBucketSize = 100000)
-    val cand = capped.select(col("g"), col("doc_id").as("doc_a"))
-      .join(capped.select(col("g"), col("doc_id").as("doc_b")), "g")
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    cand
-      .join(sorted.select(col("doc_id").as("doc_a"), col("sts").as("sa"),
-        col("sz").as("za")), "doc_a")
-      .join(sorted.select(col("doc_id").as("doc_b"), col("sts").as("sb"),
-        col("sz").as("zb")), "doc_b")
+    withSides(bucketPairs(capped, Seq("g")),
+        sorted.select(col("doc_id"), col("sts").as("s"), col("sz").as("z")))
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
       .withColumn("jaccard", col("inter").cast("double") /
         (col("za") + col("zb") - col("inter")))
@@ -1947,19 +1789,10 @@ object Dedup {
   /** Kernel on any (doc_id, text) frame — the spec runs it on planted
     * excerpt/duplicate fixtures. */
   private[graft] def containmentOn(docsRaw: DataFrame): DataFrame = {
-    // Round-12 (the x8 move, guide §2.6 idle capacity): the documents scan
-    // is ONE split at bench SFs, so the per-position 8-gram concat+xxhash —
+    // Round-12 (G.spreadScan): the per-position 8-gram concat+xxhash —
     // this query's dominant CPU — ran as 0.8-2.5 s single-task stages
-    // (PROF_JOBS). The numbered repartition (AQE never coalesces it)
-    // spreads gram generation; guarded to fire only when the scan's own
-    // parallelism is under half the session width, so a many-split
-    // production corpus skips the shuffle.
-    val width = docsRaw.sparkSession
-      .conf.get("spark.sql.shuffle.partitions").toInt
-    val docs =
-      if (docsRaw.rdd.getNumPartitions * 2 < width) docsRaw.repartition(width)
-      else docsRaw
-    val g = docs
+    // (PROF_JOBS) on the one-split scan.
+    val g = G.spreadScan(docsRaw)
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("t"))
       .filter(size(col("t")) >= 8)
       .select(col("doc_id"), explode(expr(
@@ -2090,8 +1923,7 @@ object Dedup {
       .join(grams.select(col("doc_id").as("doc_b"), col("grams").as("g_b")),
         "doc_b")
       .withColumn("jaccard",
-        size(array_intersect(col("g_a"), col("g_b"))).cast("double") /
-          size(array_union(col("g_a"), col("g_b"))))
+        jaccard(col("g_a"), col("g_b")))
       .filter(G.simFilter(col("jaccard"), lit(0.5)))
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"),
@@ -2127,17 +1959,8 @@ object Dedup {
     // same injective long encoding as the blocker ([[charGramSets]]):
     // Jaccard is identical, the 3-char string allocations are not
     val grams = charGramSets(docs)
-    // numbered repartition of the streamed side — see jaccard3gramPairs
-    // (round-11): the truth all-pairs otherwise runs on one scan split
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val a = grams.select(col("doc_id").as("doc_a"), col("grams").as("g_a"))
-      .repartition(parts)
-    val b = grams.select(col("doc_id").as("doc_b"), col("grams").as("g_b"))
-    val truth = a.crossJoin(b)
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("g_a"), col("g_b"))).cast("double") /
-          size(array_union(col("g_a"), col("g_b"))))
+    val truth = allPairs(grams.toDF("doc_id", "g_"))
+      .withColumn("jaccard", jaccard(col("g_a"), col("g_b")))
       .filter(G.simFilter(col("jaccard"), lit(0.5)))
       .select(col("doc_a"), col("doc_b"))
       // Round-12: truth and reported each feed THREE consumers (the
@@ -2523,29 +2346,10 @@ object Dedup {
     * the x12/x2 machinery). One cross join over the bounded sample, one
     * 7-key aggregate; every number integer-exact or a single division. */
   def thresholdSweep(spark: SparkSession, dir: String): DataFrame = {
-    val grams = G.table(spark, dir, "documents")
-      .filter(col("doc_id") < 200)
-      .select(col("doc_id"),
-        expr("""array_distinct(transform(sequence(1, length(text)-2),
-               |  i -> substring(text, i, 3)))""".stripMargin).as("grams"))
-      .cache()
+    val grams = charGramWindow(spark, dir, 200).cache()
     val nSample = grams.count()
-    // the cross join broadcasts b and streams a, so the heavy per-pair
-    // gram-intersection compute inherits a's partitioning — the filtered
-    // 200-row scan arrives in 1-2 partitions and serializes ~20k
-    // intersections onto one core; spreading a across the session's
-    // shuffle parallelism is a 200-row exchange that unlocks all of them
-    val a = grams.select(col("doc_id").as("doc_a"), col("grams").as("g_a"))
-      // NUMBERED repartition (round-11): the col-keyed form is
-      // AQE-coalescible and folded back to 1-2 partitions at this byte
-      // size, re-serializing the intersections it was added to spread
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val b = grams.select(col("doc_id").as("doc_b"), col("grams").as("g_b"))
-    val pairs = a.crossJoin(b)
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("j",
-        size(array_intersect(col("g_a"), col("g_b"))).cast("double") /
-          size(array_union(col("g_a"), col("g_b"))))
+    val pairs = allPairs(grams.toDF("doc_id", "g_"))
+      .withColumn("j", jaccard(col("g_a"), col("g_b")))
       .select(col("doc_a"), col("doc_b"), col("j"))
     pairs
       .select(col("doc_a"), col("doc_b"), col("j"),

@@ -64,7 +64,7 @@ object Graph {
     *
     * Plan: one self-join on l_orderkey builds candidate pairs (quadratic
     * in basket size, which TPC-H bounds at 7 lines/order; a real basket
-    * graph would cap/salt hot orders first — Skew.capBuckets is that
+    * graph would cap/salt hot orders first — CandidatePairs.capBuckets is that
     * lever), one distinct, two broadcast-sized degree joins, then the
     * wedge self-join and the closing-edge join, both keyed. Per-node
     * counts explode each triangle to its three corners — O(3·triangles)

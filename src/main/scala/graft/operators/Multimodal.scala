@@ -223,26 +223,17 @@ object Multimodal {
     * capped bucket join → hamming verify) on any (doc_id, media) frame —
     * shared by the query and the Stress `phash_neardup` ladder. */
   private[graft] def phashNearDupsOn(mediaDf: DataFrame): DataFrame = {
-    val sigs = phashSigsOn(mediaDf)
-    val banded = Dedup.capBuckets(
-      sigs.select(col("doc_id"), col("phash"),
+    val keys = Dedup.bandKeys
+    val banded = CandidatePairs.capBuckets(
+      phashSigsOn(mediaDf).select(col("doc_id"), col("phash"),
         posexplode(expr(
           """array(phash & 4095,
             |      shiftright(phash, 12) & 4095,
             |      shiftright(phash, 24) & 4095,
             |      shiftright(phash, 36) & 4095)""".stripMargin))
-          .as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), maxBucketSize = 100000)
-    val a = banded.select(col("doc_id").as("doc_a"),
-      col("phash").as("ph_a"), col("band"), col("bucket"))
-    val b = banded.select(col("doc_id").as("doc_b"),
-      col("phash").as("ph_b"), col("band"), col("bucket"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("CAST(bit_count(ph_a ^ ph_b) AS BIGINT)").as("hamming"))
-      .filter(col("hamming") <= 1)
-      .distinct()
+          .as(keys)),
+      keys, maxBucketSize = 100000)
+    CandidatePairs.hammingPairs(banded, keys, "phash", maxDist = 1)
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -453,7 +444,7 @@ object Multimodal {
       .distinct()
     val sizes = frames.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("nf")).cache()
-    val idx = Dedup.capBuckets(frames, Seq("ph"), maxBucketSize = 100000)
+    val idx = CandidatePairs.capBuckets(frames, Seq("ph"), maxBucketSize = 100000)
     val shared = idx.select(col("doc_id").as("vid_a"), col("ph"))
       .join(idx.select(col("doc_id").as("vid_b"), col("ph")), Seq("ph"))
       .filter(col("vid_a") < col("vid_b"))

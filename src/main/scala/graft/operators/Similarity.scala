@@ -210,22 +210,19 @@ object Similarity {
     * asserts outputs ⊆ brute-force pairs at the same threshold. */
   /** The sign-LSH ingest stage: (vec_id, v: array<double>) → per-table
     * bucket ids. Hyperplane sign matrix computed ONCE per partition (the
-    * deterministic planes are tiny: tables×bits×dims booleans); shared by
-    * [[lshNearDups]] and the Stress throughput harness. */
+    * deterministic planes are tiny: tables×bits×dims booleans) from
+    * `planeSign(table, bit, dim)`; shared by [[lshNearDups]], its checked
+    * twin (which only swaps the plane hash) and the Stress throughput
+    * harness. */
   private[graft] def signatureStage(df: DataFrame, tables: Int = 16,
-      bits: Int = 6): DataFrame = {
+      bits: Int = 6, planeSign: (Int, Int, Int) => Boolean = fnvPlaneSign)
+      : DataFrame = {
     val spark2 = df.sparkSession
     import spark2.implicits._
     val dims = 64 // embedding dimensionality (driver schema)
-    val vCol = if (df.columns.contains("v")) "v" else "embedding"
-    df.select(col("vec_id"), col(vCol)).as[(Long, Array[Double])]
+    df.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
       .mapPartitions { it =>
-        // mix64 finalizer is load-bearing: bare fnv64 parity made every
-        // plane ±one shared pattern (buckets/table ≈ 2, candidates ≈ n²/4
-        // — measured in the round-8 Stress ladder); see Dedup.mix64
-        val planes = Array.tabulate(tables, bits, dims) { (t, b, d) =>
-          (Dedup.mix64(Dedup.fnv64(s"$t:$b:$d")) & 1L) == 0L
-        }
+        val planes = Array.tabulate(tables, bits, dims)(planeSign)
         it.map { case (id, v) =>
           val buckets = Array.tabulate(tables) { t =>
             var sig = 0L
@@ -248,6 +245,26 @@ object Similarity {
           (id, buckets)
         }
       }.toDF("vec_id", "buckets")
+  }
+
+  /** Production plane signs: parity of the mix64-finalized FNV-64 hash.
+    * The finalizer is load-bearing: bare fnv64 parity made every plane
+    * ±one shared pattern (buckets/table ≈ 2, candidates ≈ n²/4 — measured
+    * in the round-8 Stress ladder); see Dedup.mix64. */
+  private val fnvPlaneSign: (Int, Int, Int) => Boolean = (t, b, d) =>
+    (Dedup.mix64(Dedup.fnv64(s"$t:$b:$d")) & 1L) == 0L
+
+  /** Oracle-replayable plane signs: bit 15 of h² mod p, NOT the raw
+    * parity: for these short strings the polynomial never wraps the
+    * modulus, so its parity is just the digit-sum parity of "t:b:d" and
+    * every plane degenerates to ±one shared pattern (measured: 46 buckets
+    * for 100k vectors ≈ n²/4 candidates). Squaring mod the odd prime is a
+    * real scrambler (quadratic-residue mixing) that DuckDB replays in
+    * exact BIGINT arithmetic (h² < 10¹⁸ < 2⁶³); measured bucket balance
+    * matches true-random planes. */
+  private val polyPlaneSign: (Int, Int, Int) => Boolean = { (t, b, d) =>
+    val h = Dedup.polyHashMod(s"$t:$b:$d")
+    ((((h * h) % 1000000007L) >> 15) & 1L) == 0L
   }
 
   /** Sketch width derived from corpus size: bits ≈ log₂(n/25), clamped to
@@ -283,34 +300,30 @@ object Similarity {
     * paths (knnIvf / semDedup), which bucket by data geometry instead of
     * random planes. */
   def lshNearDups(spark: SparkSession, dir: String, tables: Int = 16,
-      bits: Int = 0, threshold: Double = 0.35): DataFrame = {
-    val e = embeddings(spark, dir)
-    val b =
-      if (bits > 0) bits
-      else autoBits(G.table(spark, dir, "embeddings").count())
-    val sigs = signatureStage(e.select(col("vec_id"), col("v")), tables, b)
-    // the bucket frame feeds BOTH sides of the self-join — cache it so
-    // signatures are computed once (at scale: persist signatures as a table);
-    // Bench/Verify clearCache() between queries so these blocks don't
-    // accumulate across a 50-query session. capBuckets drops degenerate hot
-    // buckets (see Dedup.capBuckets) before the O(size²) self-join.
-    val banded = Dedup.capBuckets(
-      sigs.select(col("vec_id"), explode(col("buckets")).as("bucket")),
+      bits: Int = 0, threshold: Double = 0.35): DataFrame =
+    signLshPairs(embeddings(spark, dir), tables, bits, threshold, fnvPlaneSign)
+
+  /** The sign-LSH pipeline shared by [[lshNearDups]] and its checked twin,
+    * which differ only in `planeSign`: signatures of `e`(vec_id, v, nrm) →
+    * capped bucket pairs → exact cosine ≥ `threshold`. `bits0 = 0` derives
+    * the width from the frame's own count ([[autoBits]]). The bucket frame
+    * feeds BOTH sides of the self-join — cached so signatures are computed
+    * once (at scale: persist signatures as a table); Bench/Verify
+    * clearCache() between queries so these blocks don't accumulate across
+    * a 50-query session. */
+  private def signLshPairs(e: DataFrame, tables: Int, bits0: Int,
+      threshold: Double, planeSign: (Int, Int, Int) => Boolean): DataFrame = {
+    graft.functions.VectorExpressions.ensureRegistered(e.sparkSession)
+    val bits = if (bits0 > 0) bits0 else autoBits(e.count())
+    val banded = CandidatePairs.capBuckets(
+      signatureStage(e, tables, bits, planeSign)
+        .select(col("vec_id"), explode(col("buckets")).as("bucket")),
       Seq("bucket"), maxBucketSize = 100000)
       .cache()
-    val cand = banded.as("a")
-      .join(banded.as("b"), col("a.bucket") === col("b.bucket"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-    val vecs = e.select(col("vec_id"), col("v"), col("nrm"))
-    cand
-      .join(vecs.select(col("vec_id").as("id_a"), col("v").as("va"),
-        col("nrm").as("na")), Seq("id_a"))
-      .join(vecs.select(col("vec_id").as("id_b"), col("v").as("vb"),
-        col("nrm").as("nb")), Seq("id_b"))
-      .withColumn("sim", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(G.simFilter(col("sim"), lit(threshold)))
+    CandidatePairs.verifyPairs(
+      CandidatePairs.bucketPairs(banded, Seq("bucket"), "vec_id", "id_a", "id_b"),
+      e.select(col("vec_id"), col("v"), col("nrm").as("n")),
+      "sim" -> dot(col("va"), col("vb")) / (col("na") * col("nb")), threshold)
       .select(col("id_a"), col("id_b"), col("sim"))
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -336,67 +349,8 @@ object Similarity {
     * formula in its `nbits` CTE, so the two engines stay in lockstep at
     * any corpus size. */
   private[graft] def lshNearDupsCheckedOn(e: DataFrame, tables: Int = 16,
-      bits0: Int = 0, threshold: Double = 0.35): DataFrame = {
-    val spark = e.sparkSession
-    graft.functions.VectorExpressions.ensureRegistered(spark)
-    import spark.implicits._
-    val bits = if (bits0 > 0) bits0 else autoBits(e.count())
-    val dims = 64
-    val sigs = e.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        // sign bit = bit 15 of h² mod p, NOT the raw parity: for these
-        // short strings the polynomial never wraps the modulus, so its
-        // parity is just the digit-sum parity of "t:b:d" and every plane
-        // degenerates to ±one shared pattern (measured: 46 buckets for
-        // 100k vectors ≈ n²/4 candidates). Squaring mod the odd prime is
-        // a real scrambler (quadratic-residue mixing) that DuckDB replays
-        // in exact BIGINT arithmetic (h² < 10¹⁸ < 2⁶³); measured bucket
-        // balance matches true-random planes.
-        val planes = Array.tabulate(tables, bits, dims) { (t, b, d) =>
-          val h = Dedup.polyHashMod(s"$t:$b:$d")
-          ((((h * h) % 1000000007L) >> 15) & 1L) == 0L
-        }
-        it.map { case (id, v) =>
-          val buckets = Array.tabulate(tables) { t =>
-            var sig = 0L
-            var b = 0
-            while (b < bits) {
-              val signs = planes(t)(b)
-              var dot = 0.0
-              var d = 0
-              val n = math.min(v.length, dims)
-              while (d < n) {
-                dot += (if (signs(d)) v(d) else -v(d))
-                d += 1
-              }
-              if (dot >= 0) sig |= 1L << b
-              b += 1
-            }
-            (t.toLong << 32) | sig
-          }
-          (id, buckets)
-        }
-      }.toDF("vec_id", "buckets")
-    val banded = Dedup.capBuckets(
-      sigs.select(col("vec_id"), explode(col("buckets")).as("bucket")),
-      Seq("bucket"), maxBucketSize = 100000)
-      .cache()
-    val cand = banded.as("a")
-      .join(banded.as("b"), col("a.bucket") === col("b.bucket"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-    val vecs = e.select(col("vec_id"), col("v"), col("nrm"))
-    cand
-      .join(vecs.select(col("vec_id").as("id_a"), col("v").as("va"),
-        col("nrm").as("na")), Seq("id_a"))
-      .join(vecs.select(col("vec_id").as("id_b"), col("v").as("vb"),
-        col("nrm").as("nb")), Seq("id_b"))
-      .withColumn("sim", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(G.simFilter(col("sim"), lit(threshold)))
-      .select(col("id_a"), col("id_b"), col("sim"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
+      bits0: Int = 0, threshold: Double = 0.35): DataFrame =
+    signLshPairs(e, tables, bits0, threshold, polyPlaneSign)
 
   /** Unordered body — [[signLshRecallSql]] embeds it as a subquery
     * (factored, not string-surgered: the cdcParseBodySql lesson). */
@@ -1704,16 +1658,8 @@ object Similarity {
     * embeddings are random so 0.35 yields a thin non-empty tail). */
   def embeddingNearDups(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir).filter(col("vec_id") < 300)
-    // numbered repartition of the streamed side (round-11, guide §2.6):
-    // the bounded window arrives as one scan split and the O(pairs) dot
-    // products serialize onto one task; width follows the session conf.
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val a = e.select(col("vec_id").as("id_a"), col("v").as("va"),
-      col("nrm").as("na")).repartition(parts)
-    val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"),
-      col("nrm").as("nb"))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b"))
+      .select(col("vec_id"), col("v"), col("nrm").as("n"))
+    CandidatePairs.allPairs(e, "id_a", "id_b")
       .withColumn("sim", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(G.simFilter(col("sim"), lit(0.35)))
       .select(col("id_a"), col("id_b"), col("sim"))
@@ -1946,9 +1892,10 @@ object Similarity {
     * the inner own-join on both engines identically. */
   def silhouette(spark: SparkSession, dir: String): DataFrame = {
     val s = embeddings(spark, dir).filter(col("vec_id") < 500)
-    // numbered repartition of the streamed side — see embeddingNearDups
-    // (round-11): 250k pairwise dots otherwise run on one scan split
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // numbered repartition of the streamed side — see
+    // CandidatePairs.allPairs: 250k pairwise dots otherwise run on one
+    // scan split
+    val parts = G.shuffleWidth(spark)
     val a = s.select(col("vec_id").as("ida"), col("label").as("la"),
       col("v").as("va"), col("nrm").as("nra")).repartition(parts)
     val b = s.select(col("vec_id").as("idb"), col("label").as("lb"),

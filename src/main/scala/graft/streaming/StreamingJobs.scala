@@ -59,35 +59,15 @@ object StreamingJobs {
       "graft-replay-scratch-cleanup"))
   }
 
-  /** Base dir for per-call replay scratch (checkpoint WAL, state-store
-    * files, versioned state snapshots, parquet sinks) — all of it is
-    * ephemeral per-replay I/O, deleted at JVM exit, and every byte of it
-    * sits on the per-trigger commit path (offset/commit WAL writes, state
-    * delta files, snapshot rewrites). Round-12 (guide §6, I/O layout):
-    * MEASURED AND REJECTED as a speedup — a within-JVM A/B alternating
-    * this base between /dev/shm (RAM) and /tmp (disk) across
-    * late/scd2/resume/profile showed the two arms within noise on every
-    * query (the page cache absorbs the small per-trigger writes; nothing
-    * on the commit path fsyncs). The knob stays because it is the right
-    * seam for the A/B and for deployments whose local disks are actually
-    * slow. Resolution order: `graft.replay.tmpdir` session conf
-    * (within-JVM A/B via graft.Prof), `SPARK_GRAFT_REPLAY_TMP` env,
-    * java.io.tmpdir. Durable checkpoints for RESUMABLE production streams
-    * belong on durable storage regardless — this only places the
-    * self-contained replay harness's throwaway state. */
-  private def scratchBase(): java.nio.file.Path = {
-    val fromConf = org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(s => scala.util.Try(
-        s.conf.getOption("graft.replay.tmpdir")).toOption.flatten)
-    val fromEnv = sys.env.get("SPARK_GRAFT_REPLAY_TMP")
-    val base = fromConf.orElse(fromEnv).map(java.nio.file.Paths.get(_))
-      .getOrElse(java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir", "/tmp")))
-    java.nio.file.Files.createDirectories(base)
-    base
-  }
+  /** Per-call replay scratch (checkpoint WAL, state-store files,
+    * versioned state snapshots, parquet sinks) under java.io.tmpdir — all
+    * of it ephemeral per-replay I/O, deleted at JVM exit. A RAM-backed
+    * base measured within noise of disk in round 12 (the page cache
+    * absorbs the small per-trigger writes; nothing on the commit path
+    * fsyncs). Durable checkpoints for RESUMABLE production streams belong
+    * on durable storage regardless. */
   private def replayTmp(prefix: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(scratchBase(), prefix)
+    val p = java.nio.file.Files.createTempDirectory(prefix)
     scratchDirs.add(p.toString)
     p
   }

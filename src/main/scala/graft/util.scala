@@ -304,6 +304,23 @@ object G {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** The session's shuffle width (`spark.sql.shuffle.partitions`), read
+    * typed the way Spark plans its own exchanges — width for numbered
+    * repartitions that AQE must not coalesce. */
+  def shuffleWidth(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
+
+  /** Spread a narrow scan: the documents scan is ONE split at bench SFs,
+    * so its per-row CPU (gram/digest generation) otherwise runs as a
+    * single task while the other cores idle. Repartitions to
+    * [[shuffleWidth]] only when the frame's own parallelism is under half
+    * of it, so a many-split production corpus skips the shuffle. Row set
+    * unchanged. */
+  def spreadScan(df: DataFrame): DataFrame = {
+    val width = shuffleWidth(df.sparkSession)
+    if (df.rdd.getNumPartitions * 2 < width) df.repartition(width) else df
+  }
+
   /** Load `events` with its timestamp column normalized to TIMESTAMP_NTZ.
     *
     * The driver's generator has shipped `ts` two ways across testdata

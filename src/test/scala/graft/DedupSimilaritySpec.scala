@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.operators.{CandidatePairs, Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** Dedup/similarity/text operator semantics on sf0.001. */
@@ -120,12 +120,29 @@ class DedupSimilaritySpec extends SparkSpec {
     val hot = (1L to 50L).map(id => (id, 999L))
     val uniform = (100L to 120L).map(id => (id, id % 7))
     val banded = (hot ++ uniform).toDF("doc_id", "bucket")
-    val capped = Dedup.capBuckets(banded, Seq("bucket"), maxBucketSize = 10)
+    val capped = CandidatePairs.capBuckets(banded, Seq("bucket"), maxBucketSize = 10)
     assert(capped.filter(col("bucket") === 999L).count() == 0)     // hot dropped
     assert(capped.count() == uniform.size)                         // rest intact
     // uniform data below the cap passes through unchanged (row-identical)
-    val noCap = Dedup.capBuckets(banded, Seq("bucket"), maxBucketSize = 1000)
+    val noCap = CandidatePairs.capBuckets(banded, Seq("bucket"), maxBucketSize = 1000)
     assert(noCap.count() == banded.count())
+
+    // the engine's pair contract on the same frames: the poisoned bucket
+    // yields no pairs once capped (1225 of them uncapped), the uniform
+    // buckets yield exactly their within-bucket a < b pairs
+    def pairsOf(df: org.apache.spark.sql.DataFrame, keys: String*) =
+      CandidatePairs.bucketPairs(df, keys).as[(Long, Long)].collect().toSeq
+    val uniformPairs = (for {
+      (a, ba) <- uniform; (b, bb) <- uniform if ba == bb && a < b
+    } yield (a, b)).toSet
+    val cappedPairs = pairsOf(capped, "bucket")
+    assert(cappedPairs.size == cappedPairs.toSet.size)
+    assert(cappedPairs.toSet == uniformPairs)
+    assert(pairsOf(noCap, "bucket").size == 50 * 49 / 2 + uniformPairs.size)
+    // a pair colliding in two bands comes out once, ordered a < b
+    val twoBands = Seq((7L, 0L, 11L), (3L, 0L, 11L), (7L, 1L, 22L),
+      (3L, 1L, 22L), (5L, 1L, 33L)).toDF("doc_id", "band", "bucket")
+    assert(pairsOf(twoBands, "band", "bucket") == Seq((3L, 7L)))
   }
 
   test("text quality scores are bounded and fingerprints discriminate") {

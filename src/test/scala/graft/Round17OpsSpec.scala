@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-12 (optimization round 2) pins: the production facade carries the
-  * small-shuffle parallelism floor, and the replay scratch base resolves
-  * RAM-backed storage ahead of disk /tmp. */
+  * small-shuffle parallelism floor, and the artifact-store promotions
+  * (x7 span table, c27 base labels, g6 HITS edges) are row-identical to
+  * their inline compute. */
 class Round17OpsSpec extends SparkSpec {
 
   test("Graft.session() sets the AQE small-shuffle parallelism floor " +
@@ -69,6 +70,14 @@ class Round17OpsSpec extends SparkSpec {
   test("c27 base labels through the artifact store are row-identical to " +
       "the inline label propagation (round-12 base-label promotion)") {
     val (via, inline) = bothArms(graft.operators.Dedup.incrementalClusters)
+    assert(via == inline,
+      s"artifact path diverged: ${via.size} vs ${inline.size} rows")
+  }
+
+  test("g6 HITS edges through the artifact store are row-identical to " +
+      "the inline edge build (round-12 hits_edges promotion)") {
+    val (via, inline) = bothArms(graft.operators.Graph.hits)
+    assert(via.nonEmpty)
     assert(via == inline,
       s"artifact path diverged: ${via.size} vs ${inline.size} rows")
   }
